@@ -40,6 +40,27 @@ def release() -> int:
     return n
 
 
+def persist_tracked(df: DataFrame) -> DataFrame:
+    """``df`` persisted MEMORY_AND_DISK (spill, never evict-to-recompute)
+    and tracked for :func:`release`."""
+    from pyspark import StorageLevel
+
+    return track(df.persist(StorageLevel.MEMORY_AND_DISK))
+
+
+def cut_lineage(df: DataFrame) -> DataFrame:
+    """LAZY lineage truncation: a reliable ``checkpoint`` when the
+    session has a checkpoint dir (cluster fault tolerance), a
+    ``localCheckpoint`` otherwise.  ``eager=False`` in both cases: the
+    next action on the result materializes it, so no extra job is
+    scheduled — the downstream plan references a flat scan instead of
+    the full upstream tree (iterative plans would otherwise grow
+    without bound, and the analyzer re-walks every nested occurrence)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
+
+
 def clear_session_caches(spark) -> None:
     """Full between-query cleanup for bench/driver loops: tracked
     operator persists plus anything else sitting in the SQL cache
@@ -52,4 +73,7 @@ def clear_session_caches(spark) -> None:
         pass
 
 
-__all__ = ["track", "release", "clear_session_caches"]
+__all__ = [
+    "track", "release", "persist_tracked", "cut_lineage",
+    "clear_session_caches",
+]

@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_toolz_spark.cache import cut_lineage, persist_tracked
 from data_toolz_spark.functions.text import tokens as text_tokens
 
 
@@ -175,7 +176,6 @@ def minhash_near_duplicates(
     n_hashes: int = 64,
     bands: int = 16,
     shingle: int = 3,
-    persist: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash-LSH, verified with exact Jaccard.
 
@@ -212,21 +212,13 @@ def minhash_near_duplicates(
     members, reps = _minhash_members_reps(
         df, id_col, text_col, shingle=shingle
     )
-    if persist:
-        # members/reps feed 4 downstream branches (band join sides,
-        # verify, expand); without a persist the shingling runs once
-        # per branch.  MEMORY_AND_DISK so large corpora spill instead
-        # of OOM; callers running one-shot pipelines can pass
-        # persist=False to keep the plan fully lazy.  Both frames are
-        # registered with cache.track so long sessions can bulk-release
-        # them (cache.release) once the returned plan is materialized —
-        # the caller has no direct handle to these intermediates.
-        from pyspark import StorageLevel
-
-        from data_toolz_spark.cache import track
-
-        members = track(members.persist(StorageLevel.MEMORY_AND_DISK))
-        reps = track(reps.persist(StorageLevel.MEMORY_AND_DISK))
+    # members/reps feed 4 downstream branches (band join sides,
+    # verify, expand); without a persist the shingling runs once per
+    # branch.  MEMORY_AND_DISK so large corpora spill instead of OOM.
+    # Both frames are tracked so long sessions can bulk-release them
+    # (cache.release) once the returned plan is materialized — the
+    # caller has no direct handle to these intermediates.
+    members, reps = persist_tracked(members), persist_tracked(reps)
     verified_reps = _verified_rep_pairs(
         reps, threshold=threshold, n_hashes=n_hashes, bands=bands
     )
@@ -329,7 +321,6 @@ def minhash_components(
     n_hashes: int = 64,
     bands: int = 16,
     shingle: int = 3,
-    persist: bool = True,
 ) -> DataFrame:
     """Near-duplicate component map ``(id, component)`` WITHOUT ever
     materializing member pairs — the skew-safe drop-list/split path.
@@ -356,13 +347,7 @@ def minhash_components(
     members, reps = _minhash_members_reps(
         df, id_col, text_col, shingle=shingle
     )
-    if persist:
-        from pyspark import StorageLevel
-
-        from data_toolz_spark.cache import track
-
-        members = track(members.persist(StorageLevel.MEMORY_AND_DISK))
-        reps = track(reps.persist(StorageLevel.MEMORY_AND_DISK))
+    members, reps = persist_tracked(members), persist_tracked(reps)
     nonempty_reps = reps.filter(F.size("__elems") > 0)
     vr = _verified_rep_pairs(
         nonempty_reps, threshold=threshold, n_hashes=n_hashes, bands=bands
@@ -535,21 +520,14 @@ def connected_components(
 
     # Iterative plans MUST truncate lineage each round — persist alone
     # keeps the logical plan growing (stack overflow by ~10 rounds).
-    # Use a reliable checkpoint when the session has a checkpoint dir
-    # (cluster fault tolerance); localCheckpoint otherwise.  LAZY in
-    # both cases: the signature aggregate right after is the action
-    # that materializes the checkpoint, so each round schedules ONE
-    # job, not a checkpoint job plus a signature job.
-    def materialize(e: DataFrame) -> DataFrame:
-        if spark.sparkContext.getCheckpointDir() is not None:
-            return e.checkpoint(eager=False)
-        return e.localCheckpoint(eager=False)
-
+    # The cut is LAZY: the signature aggregate right after is the
+    # action that materializes it, so each round schedules ONE job,
+    # not a checkpoint job plus a signature job.
     # One pass over the (possibly expensive) input: normalized pairs —
     # self-pairs retained so isolated nodes survive — checkpointed,
     # then the loop's edge set and the final node set both read the
     # checkpoint instead of the caller's lineage.
-    base = materialize(
+    base = cut_lineage(
         pairs.select(
             F.col(id_a).cast("long").alias("a"),
             F.col(id_b).cast("long").alias("b"),
@@ -609,7 +587,7 @@ def connected_components(
     cur_sig = (int(pre["n_edges"] or 0), int(pre["h"]))
     converged = False
     for _ in range(max_iterations):
-        nxt = materialize(small_star(large_star(cur)))
+        nxt = cut_lineage(small_star(large_star(cur)))
         nxt_sig = signature(nxt)
         if nxt_sig == cur_sig:
             cur = nxt

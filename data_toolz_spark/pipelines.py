@@ -3,19 +3,23 @@ actually runs, wiring the §2.9 operator families together in the
 canonical order with state shared between stages.
 
     raw docs
-      → quality/repetition/web-artifact filter   (keep_document)
-      → trained quality + language gates (r10)   (logreg_score /
-                                                  multiclass_score)
-      → cross-document boilerplate removal       (line_dedup)
-      → repeated-passage removal                 (remove_duplicate_spans)
-      → near-duplicate removal                   (MinHash-LSH + CC)
-      → media content near-dup tiers (r10)       (image/audio/video
-                                                  fingerprints + Hamming
-                                                  banding + CC)
-      → eval-set decontamination                 (ngram_decontaminate)
-      → leakage-safe train/val/test split        (component_split)
-      → context-window chunking                  (chunk_documents)
-      → token-budget packing                     (pack_greedy)
+      → gates          site cap, text repair,     (cap_per_domain,
+                       quality filter + rank cut,  clean_text,
+                       trained quality/language    keep_document,
+                       gates                       logreg_score,
+                                                   multiclass_score)
+      → text_dedup     boilerplate lines,          (line_dedup,
+                       repeated passages           remove_duplicate_spans)
+      → near_dup       MinHash-LSH + CC            (minhash_components)
+      → media_dedup    image/audio/video           (fingerprints + Hamming
+                       near-dup tiers              banding + CC)
+      → decontaminate  eval-set n-gram overlap     (ngram_decontaminate)
+      → strata         CCNet perplexity buckets    (bigram LM + rank cut)
+      → split          leakage-safe train/val/test (component_split)
+      → chunk          context windows (+ token-   (chunk_documents,
+                       budget bins)                pack_greedy)
+        or token_pack  token ids → split-pure      (pack_token_sequences)
+                       packed sequences
 
 Composition details that matter at 100 TB:
 
@@ -23,30 +27,46 @@ Composition details that matter at 100 TB:
   for the drop list AND for ``component_split``, so surviving members
   of a duplicate cluster can never straddle the train/eval boundary
   (a pipeline that deduped and then hash-split independently would
-  leak).  r6: the map comes from ``minhash_components`` — transitive
+  leak).  The map comes from ``minhash_components`` — transitive
   closure over the fingerprint graph, member pairs never materialized,
   so identical-doc mega-clusters cost O(k) instead of k² edges.
 * Decontamination runs AFTER near-dup removal (fewer docs to scan) and
   BEFORE splitting (a contaminated doc must not reach any split).
-* Every stage except one is lazy DataFrame algebra folded into ONE
-  logical plan.  The exception: with ``near_dup_threshold`` set, the
-  near-dup stage runs the MinHash pair mining and the iterative
-  connected-components loop AT CALL TIME (CC is a driver loop of
-  Spark jobs — it cannot be a lazy plan node), so calling this
-  function on a large corpus does that work up front; everything
-  downstream of the returned frame stays lazy.  ``stage_counts``
-  additionally triggers one action per stage and is for audits, not
-  production runs.
+* The regions above are one STAGE TABLE (``_stage_table``): each entry
+  holds the region's name, its fingerprint params, when it is
+  enabled, its ``stage_counts`` key, and a function over a small run
+  context (the frame so far and the near-dup component map).  One
+  loop (``_run_stages``) runs the enabled entries in order and applies
+  ``materialize_to`` the same way to each: load the stage table on a
+  fingerprint hit, run and save otherwise, finalize once after the
+  last stage.  ``stage_counts`` runs the same loop and counts the rows
+  after each region that can drop documents.  The whole config is
+  validated before the loop, so a bad config costs no Spark job.
+* Most stages are lazy DataFrame algebra, but some run Spark jobs AT
+  CALL TIME, because a driver loop or a collected scalar cannot be a
+  lazy plan node: the near-dup stage (MinHash pair mining and the
+  connected-components loop), each media tier's connected-components
+  loop, the strata stage (the LM's vocab stats), and the token-pack
+  stage's lineage cut (planning a lazy checkpoint runs the broadcasts
+  in its plan).  Calling this function on a large corpus does that
+  work up front; everything downstream of the returned frame stays
+  lazy.  ``stage_counts`` additionally triggers one action per region
+  and is for audits, not production runs.
 """
 
 from __future__ import annotations
 
 import hashlib
+import inspect
 import re
-from typing import Mapping, Sequence
+from dataclasses import dataclass
+from types import SimpleNamespace
+from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_toolz_spark.cache import cut_lineage, persist_tracked
 
 
 def _fp_token(obj) -> str:
@@ -338,12 +358,8 @@ def _media_fingerprints(
         return video_fingerprint(
             sub, content_col=col, id_col=id_col, out_col="__mfp", **kw
         ).select(id_col, "__mfp")
-    if kind == "fingerprint":
-        return sub.select(id_col, F.col(col).cast("long").alias("__mfp"))
-    raise ValueError(
-        f"prepare_training_corpus: unknown media_dedup kind {kind!r} "
-        "(image, audio, video, or fingerprint)"
-    )
+    # kind == "fingerprint" (the pipeline validated the kind up front)
+    return sub.select(id_col, F.col(col).cast("long").alias("__mfp"))
 
 
 def prepare_training_corpus(
@@ -375,7 +391,6 @@ def prepare_training_corpus(
     pack_budget: int | None = None,
     token_pack: Mapping | None = None,
     seed: int = 42,
-    persist_cleaned: bool = True,
     materialize_to: str | None = None,
     input_token: str = "",
     materialize_retention: str = "prune",
@@ -387,12 +402,13 @@ def prepare_training_corpus(
     document — original columns plus ``split``.  With
     ``chunk_max_words``: one row per chunk ``(id_col, split,
     chunk_index, chunk_text, n_words)``, plus ``pack_bin`` when
-    ``pack_budget`` is set.  Stages toggle off via ``None``.
+    ``pack_budget`` is set.  Stages toggle off via ``None``.  The whole
+    config is validated before the first Spark job.
 
     ``eval_df`` (the benchmark set) enables decontamination; it only
     needs ``text_col``.
 
-    r10 session-2 tiers (all optional):
+    Optional tiers:
 
     * ``domain_cap`` — the C4/RefinedWeb per-site frequency cap, FIRST
       (URL-tier work precedes content work): a dict of
@@ -413,14 +429,14 @@ def prepare_training_corpus(
       a column to the doc-level output; with ``chunk_max_words`` the
       chunk rows do not carry it (chunk output schema is fixed).
       The LM's vocab stats collect at call time (two bounded scalars).
-      ``lm_prune`` (r12, X97) entropy-prunes the bigram table before
+      ``lm_prune`` entropy-prunes the bigram table before
       scoring — ``{"epsilon": …}`` and/or ``{"top_k": …}`` forwarded
       to :func:`~data_toolz_spark.operators.text_analysis.
       prune_bigram_counts` (with ``lang_col`` the top-k is per
       language) — the LM-compression knob for corpora whose bigram
       table outgrows a sensible join side; scoring semantics degrade
       gracefully (absent bigrams back off, by construction).
-    * ``lang_col`` (r11) — CCNet per-language conditioning: with it
+    * ``lang_col`` — CCNet per-language conditioning: with it
       set, the ``ppl_strata`` stage trains the bigram LM PER LANGUAGE
       (grouped vocab/bigram tables, per-group backoff denominators —
       one aggregate for all languages, never a driver loop) and cuts
@@ -429,7 +445,7 @@ def prepare_training_corpus(
       Static ``quality_thresholds`` are user constants and stay
       global; the data-derived quality cut points are the strata
       and the ``quality_rank_gate`` thresholds.
-    * ``quality_rank_gate`` (r12, VERDICT r11 task 5) — a
+    * ``quality_rank_gate`` — a
       DATA-DERIVED quality cut, per language when ``lang_col`` is
       set: ``{"col": <feature or existing column>, "q": (num, den),
       "keep": "ge"|"le"}`` computes the exact rank-quantile threshold
@@ -442,21 +458,20 @@ def prepare_training_corpus(
       any :func:`keep_document` feature (computed in the same
       projection) or a column already on ``docs``.
 
-    ``materialize_to`` (r11, VERDICT task 4) turns on stage
+    ``materialize_to`` turns on stage
     materialization + resume: each enabled stage region (gates, text
     dedup, near-dup + its component map, media dedup, decontaminate,
-    strata, split) writes its output as a table under this prefix
-    plus a fingerprint-chained manifest row, and a re-run with the
+    strata, split, token pack) writes its output as a table under this
+    prefix plus a fingerprint-chained manifest row, and a re-run with the
     same prefix + config RESUMES — stages whose manifest fingerprint
     matches load from their table instead of recomputing, so a 100 TB
     run that dies at stage 9 of 11 does not redo stages 1-8.  A
     config change at stage k invalidates exactly stages ≥ k.  The
     input corpus is never hashed: pass a new ``input_token`` when the
     underlying data (docs or eval_df) changes, or stale stage tables
-    will be trusted.  Default (None) leaves the one-lazy-plan
-    behavior untouched.
+    will be trusted.  Default (None) writes no tables.
 
-    ``materialize_retention`` (r12) controls end-of-run warehouse
+    ``materialize_retention`` controls end-of-run warehouse
     hygiene under ``materialize_to``: ``"prune"`` (default) drops
     stage tables and manifest rows that are not on this run's chain
     (superseded configs stop accumulating dead data), ``"keep"``
@@ -466,143 +481,295 @@ def prepare_training_corpus(
     packed table; the chain cannot tell "skipped on purpose" from
     "superseded", so the caller must say).
     """
-    from data_toolz_spark.operators.text_analysis import (
-        keep_document,
-        line_dedup,
-    )
+    # the config is every parameter above, by name
+    return _run_stages(SimpleNamespace(**locals()))
 
-    if near_dup_keep not in ("min_id", "longest"):
+
+_DEFAULT_FRACTIONS = {"train": 0.98, "val": 0.01, "test": 0.01}
+
+
+@dataclass
+class _Run:
+    """What the stage functions share: the config ``c`` (the
+    :func:`prepare_training_corpus` parameters), the frame so far
+    ``out``, and the near-dup component map ``cc`` — None until the
+    near-dup stage runs or resumes; the split and token-pack stages
+    route by it."""
+
+    c: SimpleNamespace
+    out: DataFrame
+    cc: DataFrame | None = None
+
+
+@dataclass(frozen=True)
+class _Stage:
+    """One region of the pipeline.  ``params`` feed the stage's chain
+    fingerprint under ``materialize_to`` (None: the region is never
+    materialized); ``side`` names the side table that holds ``cc``;
+    ``count`` is the region's :func:`stage_counts` key, set on the
+    regions that can drop documents."""
+
+    name: str
+    enabled: bool
+    params: Mapping | None
+    run: Callable[[_Run], DataFrame]
+    side: str | None = None
+    count: str | None = None
+
+
+def _check_config(c: SimpleNamespace) -> None:
+    """Every config check, ahead of the first Spark job: a bad config
+    must not first pay for the call-time near-dup pass or write stage
+    tables under ``materialize_to``."""
+    if c.near_dup_keep not in ("min_id", "longest"):
         raise ValueError(
             "prepare_training_corpus: near_dup_keep must be 'min_id' "
-            f"or 'longest', got {near_dup_keep!r}"
+            f"or 'longest', got {c.near_dup_keep!r}"
         )
-    if materialize_retention not in ("prune", "keep"):
+    if c.materialize_retention not in ("prune", "keep"):
         raise ValueError(
             "prepare_training_corpus: materialize_retention must be "
-            f"'prune' or 'keep', got {materialize_retention!r}"
+            f"'prune' or 'keep', got {c.materialize_retention!r}"
         )
-    _prune = materialize_retention == "prune"
+    if c.quality_rank_gate is not None:
+        side = dict(c.quality_rank_gate).get("keep", "ge")
+        if side not in ("ge", "le"):
+            raise ValueError(
+                f"quality_rank_gate: keep must be 'ge' or 'le', got {side!r}"
+            )
+    if c.lang_model is not None and not c.keep_langs:
+        raise ValueError(
+            "prepare_training_corpus: lang_model requires "
+            "keep_langs (the language predictions to keep)"
+        )
+    for spec in c.media_dedup or ():
+        if spec["kind"] not in _MEDIA_TAU:
+            raise ValueError(
+                "prepare_training_corpus: unknown media_dedup kind "
+                f"{spec['kind']!r} (image, audio, video, or fingerprint)"
+            )
+    if c.pack_budget is not None and c.chunk_max_words is None:
+        raise ValueError("pack_budget requires chunk_max_words")
+    if c.token_pack is not None:
+        if c.chunk_max_words is not None:
+            raise ValueError(
+                "token_pack is exclusive with chunk_max_words/"
+                "pack_budget — pick word-chunking or token packing"
+            )
+        if not {"model", "wp_vocab", "ids_expr"} & set(c.token_pack):
+            raise ValueError(
+                "token_pack: pass 'model' (UnigramModel), 'wp_vocab' "
+                "(a trained WordPiece piece→id dict) or 'ids_expr' "
+                "(an id-array Column over the text)"
+            )
 
-    base_cols = docs.columns
-    out = docs
 
+def _stage_table(c: SimpleNamespace) -> list[_Stage]:
+    """The pipeline's regions in run order.  Names, params, order and
+    enabled conditions define the materialization chain: changing any
+    of them changes the fingerprints and ``{prefix}_sNN_{name}`` table
+    names of every later stage, and warehouses written before the
+    change stop resuming."""
+    return [
+        _Stage(
+            "gates",
+            True,
+            {
+                "domain_cap": c.domain_cap,
+                "clean": c.clean,
+                "thresholds": c.quality_thresholds,
+                "qrank": c.quality_rank_gate,
+                "qmodel": c.quality_model,
+                "qmin": c.quality_min_prob,
+                "lmodel": c.lang_model,
+                "langs": c.keep_langs,
+            },
+            _gates,
+            count="quality",
+        ),
+        _Stage(
+            "text_dedup",
+            c.line_dedup_max_doc_freq is not None
+            or c.span_dedup_n is not None,
+            {
+                "line_max": c.line_dedup_max_doc_freq,
+                "line_sep": c.line_sep,
+                "span_n": c.span_dedup_n,
+            },
+            _text_dedup,
+            count="text_dedup",
+        ),
+        _Stage(
+            "near_dup",
+            c.near_dup_threshold is not None,
+            {"threshold": c.near_dup_threshold, "keep": c.near_dup_keep},
+            _near_dup,
+            side="near_dup_cc",
+            count="near_dup",
+        ),
+        _Stage(
+            "media_dedup",
+            bool(c.media_dedup),
+            {"specs": list(c.media_dedup or ())},
+            _media_dedup,
+            count="media_dedup",
+        ),
+        _Stage(
+            "decontaminate",
+            c.eval_df is not None,
+            {"n": c.decontaminate_n},
+            _decontaminate,
+            count="decontaminated",
+        ),
+        _Stage(
+            "strata",
+            c.ppl_strata is not None,
+            {"spec": dict(c.ppl_strata or {}), "lang": c.lang_col},
+            _strata,
+        ),
+        _Stage(
+            "split", True, {"fracs": c.fractions, "seed": c.seed}, _split
+        ),
+        _Stage("chunk", c.chunk_max_words is not None, None, _chunk),
+        _Stage(
+            "token_pack",
+            c.token_pack is not None,
+            {"spec": dict(c.token_pack or {})},
+            _token_pack,
+        ),
+    ]
+
+
+def _run_stages(
+    c: SimpleNamespace, counts: dict[str, int] | None = None
+) -> DataFrame:
+    """Validate ``c``, then run its stage table: a materialized stage
+    whose chain fingerprint hits loads its table (and its side table
+    into ``cc``) instead of running; one that runs saves its output
+    (side table first).  ``counts`` receives the row count after each
+    enabled region that has a count key."""
+    _check_config(c)
+    c.fractions = dict(c.fractions or _DEFAULT_FRACTIONS)
     mat = (
         _Materializer(
-            docs.sparkSession,
-            materialize_to,
+            c.docs.sparkSession,
+            c.materialize_to,
             # id_col/text_col feed EVERY stage, so they seed the
             # chain alongside the data token — switching either must
             # invalidate all stage tables, not silently resume frames
             # built from the other column
-            f"{input_token}|id={id_col}|text={text_col}",
+            f"{c.input_token}|id={c.id_col}|text={c.text_col}",
         )
-        if materialize_to is not None
+        if c.materialize_to is not None
         else None
     )
-    # gates region (stages 0-1c): resume skips every filter below
-    _skip_gates = mat is not None and mat.hit(
-        "gates",
-        {
-            "domain_cap": domain_cap,
-            "clean": clean,
-            "thresholds": quality_thresholds,
-            "qrank": quality_rank_gate,
-            "qmodel": quality_model,
-            "qmin": quality_min_prob,
-            "lmodel": lang_model,
-            "langs": keep_langs,
-        },
-    )
+    r = _Run(c, c.docs)
+    for st in _stage_table(c):
+        if not st.enabled:
+            continue
+        materialized = mat is not None and st.params is not None
+        sides = (st.side,) if st.side else ()
+        if materialized and mat.hit(st.name, st.params, side=sides):
+            r.out = mat.load(st.name)
+            if st.side:
+                r.cc = mat.load(st.side)
+        else:
+            r.out = st.run(r)
+            if materialized:
+                if st.side:
+                    r.cc = mat.save(st.side, r.cc)
+                r.out = mat.save(st.name, r.out)
+        if counts is not None and st.count:
+            counts[st.count] = r.out.count()
+    if mat is not None:
+        mat.finalize(prune=c.materialize_retention == "prune")
+    return r.out
 
-    # 0. per-site frequency cap (optional) — before any content work:
+
+def _gates(r: _Run) -> DataFrame:
+    """Site cap, text repair, heuristic quality gate (+ rank-quantile
+    cut), trained quality and language gates."""
+    from data_toolz_spark.operators.text_analysis import keep_document
+
+    c, out = r.c, r.out
+    base_cols = c.docs.columns
+    # per-site frequency cap (optional) — before any content work:
     # rows a site is over quota for never pay tokenization, hashing,
     # or dedup I/O
-    if not _skip_gates and domain_cap is not None:
+    if c.domain_cap is not None:
         from data_toolz_spark.operators.urls import cap_per_domain
 
         out = cap_per_domain(
-            out, id_col=id_col, **dict(domain_cap)
+            out, id_col=c.id_col, **dict(c.domain_cap)
         ).select(*base_cols)
 
-    # 0b. text repair (optional): clean_text — NFC, control/zero-width
+    # text repair (optional): clean_text — NFC, control/zero-width
     # strip, unicode-space fold, newline canonicalization — BEFORE the
     # quality gate so its signals (alpha ratio, token stats, line
     # dedup keys) see the repaired text.  ``clean=True`` for defaults
     # or a dict of clean_text kwargs.
     # truthiness would silently DISABLE the tier for clean={} — the
     # sibling specs' "empty dict = on with defaults" convention
-    if not _skip_gates and clean is not False and clean is not None:
+    if c.clean is not False and c.clean is not None:
         from data_toolz_spark.operators.text_analysis import clean_text
 
-        kw = dict(clean) if isinstance(clean, Mapping) else {}
-        out = out.withColumn(text_col, clean_text(text_col, **kw))
+        kw = dict(c.clean) if isinstance(c.clean, Mapping) else {}
+        out = out.withColumn(c.text_col, clean_text(c.text_col, **kw))
 
-    # 1. per-document quality gate (map-only)
-    if not _skip_gates:
-        out = keep_document(
-            out, text_col, thresholds=quality_thresholds
+    # per-document quality gate (map-only)
+    out = keep_document(out, c.text_col, thresholds=c.quality_thresholds)
+    out = out.filter(F.col("keep"))
+    # data-derived rank-quantile quality cut — per language when
+    # lang_col is set; thresholds via the exact integer-rank histogram
+    # pass, joined back as a broadcast
+    if c.quality_rank_gate is not None:
+        from pyspark.sql.functions import broadcast
+
+        from data_toolz_spark.operators.text_analysis import (
+            rank_thresholds,
         )
-        out = out.filter(F.col("keep"))
-        # 1a. data-derived rank-quantile quality cut (r12) — per
-        # language when lang_col is set; thresholds via the exact
-        # integer-rank histogram pass, joined back as a broadcast
-        if quality_rank_gate is not None:
-            spec = dict(quality_rank_gate)
-            gate_col = spec["col"]
-            q_num, q_den = spec.get("q", (1, 10))
-            side = spec.get("keep", "ge")
-            if side not in ("ge", "le"):
-                raise ValueError(
-                    "quality_rank_gate: keep must be 'ge' or 'le', "
-                    f"got {side!r}"
-                )
-            from pyspark.sql.functions import broadcast
 
-            from data_toolz_spark.operators.text_analysis import (
-                rank_thresholds,
-            )
+        spec = dict(c.quality_rank_gate)
+        gate_col = spec["col"]
+        q_num, q_den = spec.get("q", (1, 10))
+        gcols = [c.lang_col] if c.lang_col else []
+        thr = rank_thresholds(
+            out.select(*gcols, gate_col),
+            gate_col,
+            [(int(q_num), int(q_den))],
+            group_cols=gcols,
+        ).select(*gcols, F.col("threshold").alias("__qr_thr"))
+        if gcols:
+            # struct equality treats NULL fields as equal — the
+            # NULL-language stratum joins its own threshold
+            # instead of silently dropping
+            out = out.join(
+                broadcast(
+                    thr.withColumn(
+                        "__qr_k",
+                        F.struct(*[F.col(g) for g in gcols]),
+                    ).drop(*gcols)
+                ),
+                F.struct(*[F.col(g) for g in gcols]) == F.col("__qr_k"),
+                "left",
+            ).drop("__qr_k")
+        else:
+            out = out.crossJoin(broadcast(thr))  # 1-row scalar
+        pred = (
+            F.col(gate_col) >= F.col("__qr_thr")
+            if spec.get("keep", "ge") == "ge"
+            else F.col(gate_col) <= F.col("__qr_thr")
+        )
+        out = out.filter(pred).drop("__qr_thr")
+    out = out.select(*base_cols)
 
-            gcols = [lang_col] if lang_col else []
-            thr = rank_thresholds(
-                out.select(*gcols, gate_col),
-                gate_col,
-                [(int(q_num), int(q_den))],
-                group_cols=gcols,
-            ).select(
-                *gcols, F.col("threshold").alias("__qr_thr")
-            )
-            if gcols:
-                # struct equality treats NULL fields as equal — the
-                # NULL-language stratum joins its own threshold
-                # instead of silently dropping (the X87 device)
-                out = out.join(
-                    broadcast(
-                        thr.withColumn(
-                            "__qr_k",
-                            F.struct(*[F.col(c) for c in gcols]),
-                        ).drop(*gcols)
-                    ),
-                    F.struct(*[F.col(c) for c in gcols])
-                    == F.col("__qr_k"),
-                    "left",
-                ).drop("__qr_k")
-            else:
-                out = out.crossJoin(broadcast(thr))  # 1-row scalar
-            pred = (
-                F.col(gate_col) >= F.col("__qr_thr")
-                if side == "ge"
-                else F.col(gate_col) <= F.col("__qr_thr")
-            )
-            out = out.filter(pred).drop("__qr_thr")
-        out = out.select(*base_cols)
-
-    # 1b. TRAINED quality filter (r10, optional): a LogRegModel from
+    # TRAINED quality filter (optional): a LogRegModel from
     # operators/classifier.py scores the standard heuristic features
     # (quality_features → web_artifact_features — the columns the
     # bench's x_quality_logreg distillation trains on) as one codegen
     # projection; rows below quality_min_prob drop.  Train once,
     # gate every pipeline run — the GPT-3 curation move.
-    if not _skip_gates and quality_model is not None:
+    if c.quality_model is not None:
         from data_toolz_spark.operators.classifier import logreg_score
         from data_toolz_spark.operators.text_analysis import (
             quality_features,
@@ -610,534 +777,363 @@ def prepare_training_corpus(
         )
 
         feat = web_artifact_features(
-            quality_features(out, text_col), text_col
+            quality_features(out, c.text_col), c.text_col
         )
-        scored = logreg_score(
-            feat, quality_model, out_col="__qprob"
-        )
+        scored = logreg_score(feat, c.quality_model, out_col="__qprob")
         out = scored.filter(
-            F.col("__qprob") >= float(quality_min_prob)
+            F.col("__qprob") >= float(c.quality_min_prob)
         ).select(*base_cols)
 
-    # 1c. TRAINED language filter (r10, optional): a MulticlassModel
-    # (the fastText-shaped LID classifier) predicts per doc; only
+    # TRAINED language filter (optional): a MulticlassModel (the
+    # fastText-shaped LID classifier) predicts per doc; only
     # ``keep_langs`` predictions survive.  One explode + broadcast
     # weight join + per-doc argmax.
-    if not _skip_gates and lang_model is not None:
-        if not keep_langs:
-            raise ValueError(
-                "prepare_training_corpus: lang_model requires "
-                "keep_langs (the language predictions to keep)"
-            )
+    if c.lang_model is not None:
         from data_toolz_spark.operators.classifier import (
             multiclass_score,
         )
 
         out = multiclass_score(
-            out, lang_model, text_col=text_col, id_col=id_col,
+            out, c.lang_model, text_col=c.text_col, id_col=c.id_col,
             out_col="__lang_pred",
         )
         out = out.filter(
-            F.col("__lang_pred").isin(*list(keep_langs))
+            F.col("__lang_pred").isin(*list(c.keep_langs))
         ).select(*base_cols)
+    return out
 
-    if mat is not None:
-        out = (
-            mat.load("gates")
-            if _skip_gates
-            else mat.save("gates", out)
-        )
 
-    # text-dedup region (stages 2-2b)
-    _td_on = (
-        line_dedup_max_doc_freq is not None or span_dedup_n is not None
-    )
-    _skip_td = (
-        mat is not None
-        and _td_on
-        and mat.hit(
-            "text_dedup",
-            {
-                "line_max": line_dedup_max_doc_freq,
-                "line_sep": line_sep,
-                "span_n": span_dedup_n,
-            },
-        )
-    )
+def _text_dedup(r: _Run) -> DataFrame:
+    """Cross-document boilerplate-line removal, then exact repeated-span
+    removal — each optional."""
+    c, out = r.c, r.out
+    base_cols = c.docs.columns
+    if c.line_dedup_max_doc_freq is not None:
+        from data_toolz_spark.operators.text_analysis import line_dedup
 
-    # 2. cross-document boilerplate removal (optional)
-    if not _skip_td and line_dedup_max_doc_freq is not None:
         cleaned = line_dedup(
             out,
-            id_col=id_col,
-            text_col=text_col,
-            max_doc_freq=line_dedup_max_doc_freq,
-            sep=line_sep,
-        ).select(id_col, F.col("clean_text"))
+            id_col=c.id_col,
+            text_col=c.text_col,
+            max_doc_freq=c.line_dedup_max_doc_freq,
+            sep=c.line_sep,
+        ).select(c.id_col, F.col("clean_text"))
         out = (
-            out.drop(text_col)
-            .join(cleaned, on=id_col)
-            .withColumnRenamed("clean_text", text_col)
+            out.drop(c.text_col)
+            .join(cleaned, on=c.id_col)
+            .withColumnRenamed("clean_text", c.text_col)
             .select(*base_cols)
         )
 
-    # 2b. exact duplicate-span removal (optional): cut repeated
-    # passages (ExactSubstr) before near-dup detection so a shared
-    # boilerplate block does not glue otherwise-distinct docs into one
-    # MinHash cluster
-    if not _skip_td and span_dedup_n is not None:
+    # cut repeated passages (ExactSubstr) before near-dup detection so
+    # a shared boilerplate block does not glue otherwise-distinct docs
+    # into one MinHash cluster
+    if c.span_dedup_n is not None:
         from data_toolz_spark.operators.text_analysis import (
             remove_duplicate_spans,
         )
 
         out = remove_duplicate_spans(
-            out, id_col=id_col, text_col=text_col, n=span_dedup_n
+            out, id_col=c.id_col, text_col=c.text_col, n=c.span_dedup_n
         ).select(*base_cols)
-    if mat is not None and _td_on:
-        out = (
-            mat.load("text_dedup")
-            if _skip_td
-            else mat.save("text_dedup", out)
-        )
-
-    # 3. near-duplicate removal; the CC map is computed ONCE and shared
-    # with the split below (drop list = non-representative members,
-    # route key = component min) — the leakage-safety coupling
-    cc = None
-    _skip_nd = (
-        mat is not None
-        and near_dup_threshold is not None
-        and mat.hit(
-            "near_dup",
-            {"threshold": near_dup_threshold, "keep": near_dup_keep},
-            side=("near_dup_cc",),
-        )
-    )
-    if _skip_nd:
-        out = mat.load("near_dup")
-        cc = mat.load("near_dup_cc")
-    elif near_dup_threshold is not None:
-        from pyspark import StorageLevel
-
-        from data_toolz_spark.cache import track
-        from data_toolz_spark.operators.dedup import minhash_components
-
-        # The CC stage materializes at call time (its pair checkpoint
-        # is an action), and the FINAL plan reads the cleaned text
-        # again — without a persist here, every upstream text stage
-        # (quality gate, line dedup, span dedup) executes twice.  At
-        # sf0.1 the recompute is seconds and the A/B is within noise;
-        # at 100 TB running the text stages twice is the single
-        # largest avoidable CPU cost in the pipeline, so the persist
-        # (MEMORY_AND_DISK: spill, never evict-to-recompute) is on
-        # when ``persist_cleaned`` — tracked for release by the
-        # session cache hygiene.
-        if persist_cleaned:
-            out = track(out.persist(StorageLevel.MEMORY_AND_DISK))
-
-        # r6: the component map is built over the FINGERPRINT graph
-        # (minhash_components) — member pairs are never materialized,
-        # so a crawl's mega-clusters of identical docs cost O(k), not
-        # the k² edges the pair-expansion path would feed the CC loop
-        cc = minhash_components(
-            out, id_col, text_col, threshold=near_dup_threshold
-        )
-        if mat is not None:
-            # the map is needed twice (drops here, split routing
-            # below) and must survive a crash before the split — the
-            # side table saves under the owning stage's fingerprint
-            cc = mat.save("near_dup_cc", cc)
-        if near_dup_keep == "longest":
-            # quality-aware survivor: the cluster's longest member
-            # (ties → min id) — the split routing below still keys on
-            # the component MIN, so leakage-safety is untouched
-            from data_toolz_spark.operators.dedup import (
-                component_representatives,
-            )
-
-            reps = component_representatives(
-                cc,
-                out.select(
-                    F.col(id_col).alias("id"),
-                    F.length(text_col).alias("__s"),
-                ),
-                score_col="__s",
-            )
-            drops = reps.filter(
-                F.col("id") != F.col("kept_id")
-            ).select(F.col("id").alias(id_col))
-        else:
-            drops = cc.filter(
-                F.col("id") != F.col("component")
-            ).select(F.col("id").alias(id_col))
-        out = out.join(drops, on=id_col, how="left_anti")
-        if mat is not None:
-            out = mat.save("near_dup", out)
-
-    # 3b. content-fingerprint near-dup tiers (r10, optional): image /
-    # audio / video binary columns hash in one Arrow pass each, pairs
-    # mine through the generic Hamming banding, and the skew-safe
-    # component map drops everything but the min-id representative.
-    # Runs AFTER the text tier (fewer docs to decode — decode is the
-    # expensive step) and BEFORE decontamination/splitting.  Like the
-    # text tier, each component keeps exactly ONE surviving member, so
-    # split leakage-safety holds downstream without coupling these
-    # maps into component_split.  Each tier's CC loop materializes at
-    # call time (same contract as stage 3), hence the persist.
-    _skip_md = (
-        mat is not None
-        and bool(media_dedup)
-        and mat.hit("media_dedup", {"specs": list(media_dedup)})
-    )
-    if _skip_md:
-        out = mat.load("media_dedup")
-    elif media_dedup:
-        from data_toolz_spark.operators.dedup import (
-            fingerprint_components,
-        )
-
-        if persist_cleaned and cc is None:
-            from pyspark import StorageLevel
-
-            from data_toolz_spark.cache import track
-
-            out = track(out.persist(StorageLevel.MEMORY_AND_DISK))
-
-        spark = out.sparkSession
-
-        def _trunc(df: DataFrame) -> DataFrame:
-            # LAZY lineage truncation after each tier: the next tier's
-            # fingerprint scan (or the caller's first action) is the
-            # materializing job, so no extra pass is scheduled — but
-            # the downstream plan references a flat scan instead of a
-            # tree that re-nests every anti-join under the chunk /
-            # decontamination self-joins (the analyzer's
-            # DeduplicateRelations pass blows up on that shape).
-            if spark.sparkContext.getCheckpointDir() is not None:
-                return df.checkpoint(eager=False)
-            return df.localCheckpoint(eager=False)
-
-        for spec in media_dedup:
-            fp = _media_fingerprints(out, spec, id_col)
-            tau = int(
-                spec.get("max_hamming", _MEDIA_TAU[spec["kind"]])
-            )
-            comp = fingerprint_components(
-                fp.filter(F.col("__mfp").isNotNull()),
-                id_col,
-                "__mfp",
-                max_hamming=tau,
-            )
-            drops = comp.filter(
-                F.col("id") != F.col("component")
-            ).select(F.col("id").alias(id_col))
-            out = _trunc(out.join(drops, on=id_col, how="left_anti"))
-        if mat is not None:
-            out = mat.save("media_dedup", out)
-
-    # 4. benchmark decontamination (optional)
-    _skip_dc = (
-        mat is not None
-        and eval_df is not None
-        and mat.hit("decontaminate", {"n": decontaminate_n})
-    )
-    if _skip_dc:
-        out = mat.load("decontaminate")
-    elif eval_df is not None:
-        from data_toolz_spark.operators.decontamination import (
-            ngram_decontaminate,
-        )
-
-        flagged = ngram_decontaminate(
-            out,
-            eval_df,
-            id_col=id_col,
-            text_col=text_col,
-            n=decontaminate_n,
-        ).select(id_col)
-        out = out.join(flagged, on=id_col, how="left_anti")
-        if mat is not None:
-            out = mat.save("decontaminate", out)
-
-    # 4b. CCNet perplexity strata (r10, optional): bigram LM trained
-    # on the surviving corpus, exact rank thresholds, labels joined
-    # back by id.  After decontamination (train on the cleanest text),
-    # before the split (samplers stratify within splits downstream).
-    _skip_ps = (
-        mat is not None
-        and ppl_strata is not None
-        and mat.hit(
-            "strata", {"spec": dict(ppl_strata), "lang": lang_col}
-        )
-    )
-    if _skip_ps:
-        out = mat.load("strata")
-    elif ppl_strata is not None:
-        from data_toolz_spark.operators.text_analysis import (
-            bigram_logprob,
-            bucket_by_thresholds,
-            build_bigram_counts,
-            build_vocab,
-            rank_thresholds,
-        )
-
-        # two costs to contain here (measured 108-114 s marginal at
-        # sf0.01 before, ~3 s after):
-        # 1. the LM reads the surviving corpus five times (vocab,
-        #    bigram counts, vocab stats, scoring, thresholds) — the
-        #    persist makes the re-reads cache hits;
-        # 2. the strata join embeds the corpus subtree in the final
-        #    plan several more times, and the ANALYZER re-walks the
-        #    full upstream tree per occurrence (persist does not
-        #    shrink the logical plan) — the lazy checkpoint truncates
-        #    lineage, the same device as the media tiers.
-        if persist_cleaned:
-            from pyspark import StorageLevel
-
-            from data_toolz_spark.cache import track
-
-            out = track(out.persist(StorageLevel.MEMORY_AND_DISK))
-        spark_ = out.sparkSession
-        if spark_.sparkContext.getCheckpointDir() is not None:
-            out = out.checkpoint(eager=False)
-        else:
-            out = out.localCheckpoint(eager=False)
-
-        spec = dict(ppl_strata)
-        qs = [tuple(q) for q in spec.get("qs", ((1, 3), (2, 3)))]
-        labels = tuple(
-            spec.get("labels", ("head", "middle", "tail"))
-        )
-        bucket_col = spec.get("out_col", "ppl_bucket")
-        # ``group_col`` (e.g. a language column) cuts the strata PER
-        # GROUP — CCNet's per-language percentiles: a language whose
-        # LM scores run globally high still splits into its own
-        # head/middle/tail instead of landing wholesale in "tail".
-        # ``lang_col`` (r11, VERDICT task 5) goes further: the LM
-        # ITSELF trains per language (grouped vocab + bigram tables,
-        # per-group backoff denominators — Wenzek et al. 2020 §4.3's
-        # per-language conditioning), and the strata default to the
-        # same grouping (spec's explicit group_col still wins).
-        group_col = spec.get("group_col", lang_col)
-        vocab_tbl = build_vocab(out, text_col, group_col=lang_col)
-        bigram_tbl = build_bigram_counts(
-            out, text_col, group_col=lang_col
-        )
-        lm_prune = spec.get("lm_prune")
-        if lm_prune is not None:
-            from data_toolz_spark.operators.text_analysis import (
-                prune_bigram_counts,
-            )
-
-            bigram_tbl = prune_bigram_counts(
-                bigram_tbl,
-                vocab_tbl,
-                group_col=lang_col,
-                **dict(lm_prune),
-            )
-        scored = bigram_logprob(
-            out,
-            bigram_tbl,
-            vocab_tbl,
-            text_col,
-            id_col=id_col,
-            group_col=lang_col,
-        )
-        gcols = []
-        if group_col is not None:
-            scored = scored.join(
-                out.select(id_col, group_col), on=id_col
-            )
-            gcols = [group_col]
-        thr = rank_thresholds(
-            scored, "bg_nll", qs, group_cols=gcols
-        )
-        labeled = bucket_by_thresholds(
-            scored,
-            "bg_nll",
-            thr,
-            group_cols=gcols,
-            bucket_col=bucket_col,
-            labels=labels,
-        ).select(id_col, bucket_col)
-        out = out.join(labeled, on=id_col, how="left")
-        if mat is not None:
-            out = mat.save("strata", out)
-
-    # 5. deterministic split — leakage-safe when a component map exists
-    fracs = dict(fractions or {"train": 0.98, "val": 0.01, "test": 0.01})
-    _skip_sp = (
-        mat is not None
-        and mat.hit("split", {"fracs": fracs, "seed": seed})
-    )
-    if _skip_sp:
-        out = mat.load("split")
-    else:
-        if cc is not None:
-            from data_toolz_spark.operators.sampling import (
-                component_split,
-            )
-
-            out = component_split(
-                out,
-                id_col=id_col,
-                fractions=fracs,
-                seed=seed,
-                components=cc,
-            )
-        else:
-            from data_toolz_spark.operators.sampling import hash_split
-
-            out = hash_split(out, [id_col], fracs, seed=seed)
-        if mat is not None:
-            out = mat.save("split", out)
-
-    # 6. context-window chunking (optional)
-    if chunk_max_words is not None:
-        from data_toolz_spark.operators.text_analysis import chunk_documents
-
-        splits = out.select(id_col, "split")
-        chunks = chunk_documents(
-            out,
-            id_col=id_col,
-            text_col=text_col,
-            max_words=chunk_max_words,
-            overlap=chunk_overlap,
-        )
-        out = chunks.join(splits, on=id_col)
-
-        # 7. token-budget packing for shard assembly (optional)
-        if pack_budget is not None:
-            from data_toolz_spark.operators.sampling import pack_greedy
-
-            out = out.withColumn(
-                "__chunk_key",
-                F.concat_ws("#", F.col(id_col), F.col("chunk_index")),
-            )
-            out = pack_greedy(
-                out,
-                id_col="__chunk_key",
-                token_col="n_words",
-                budget=pack_budget,
-                seed=seed,
-            ).drop("__chunk_key")
-    elif pack_budget is not None:
-        raise ValueError("pack_budget requires chunk_max_words")
-
-    # 8. REAL-token-id sequence packing (r10, optional — the full
-    # raw-docs → packed-pretraining-sequences path in one call):
-    # encode every surviving doc to token ids (``model`` = a trained
-    # UnigramModel, or ``ids_expr`` = any prepared id-array Column
-    # over text_col, e.g. bpe_encode_bytes_expr's output), then
-    # pack_token_sequences PER SPLIT — sequences concatenate documents,
-    # so packing across splits would stitch val tokens into train
-    # sequences; the per-split invocations keep every sequence
-    # split-pure and the near-dup component routing still applies.
-    # Output: (split, shard, seq_index, input_ids).
-    if token_pack is not None:
-        if chunk_max_words is not None:
-            raise ValueError(
-                "token_pack is exclusive with chunk_max_words/"
-                "pack_budget — pick word-chunking or token packing"
-            )
-        spec = dict(token_pack)
-        # the encode touches EVERY surviving byte — at 100 TB it is
-        # the most expensive stage to lose in a crash, so it
-        # materializes too (the model fingerprints by its
-        # value-carrying repr; an ids_expr Column by its expression
-        # string)
-        if mat is not None and mat.hit("token_pack", {"spec": spec}):
-            packed = mat.load("token_pack")
-            mat.finalize(prune=_prune)
-            return packed
-        seq_len = int(spec["seq_len"])
-        eos_id = int(spec["eos_id"])
-        from data_toolz_spark.operators.sampling import (
-            pack_token_sequences,
-        )
-
-        if "model" in spec:
-            from data_toolz_spark.operators.unigram import (
-                unigram_encode,
-            )
-
-            ids = unigram_encode(
-                out,
-                spec["model"],
-                id_col=id_col,
-                text_col=text_col,
-                # None → the model's own longest piece (r11 advice fix:
-                # a hardcoded 8 diverged from models trained larger)
-                max_piece_len=spec.get("max_piece_len"),
-            )
-        elif "wp_vocab" in spec:
-            from data_toolz_spark.operators.wordpiece import (
-                wordpiece_encode,
-            )
-
-            ids = wordpiece_encode(
-                out,
-                spec["wp_vocab"],
-                id_col=id_col,
-                text_col=text_col,
-                max_word_len=spec.get("max_word_len"),
-            )
-        elif "ids_expr" in spec:
-            ids = out.select(
-                F.col(id_col), spec["ids_expr"].alias("ids")
-            )
-        else:
-            raise ValueError(
-                "token_pack: pass 'model' (UnigramModel), 'wp_vocab' "
-                "(a trained WordPiece piece→id dict) or 'ids_expr' "
-                "(an id-array Column over the text)"
-            )
-        ids = ids.join(out.select(id_col, "split"), on=id_col)
-        # the encode plan embeds the full upstream tree and each
-        # split's pack re-reads it — same persist + lineage-truncation
-        # device as the strata stage
-        if persist_cleaned:
-            from pyspark import StorageLevel
-
-            from data_toolz_spark.cache import track
-
-            ids = track(ids.persist(StorageLevel.MEMORY_AND_DISK))
-        if out.sparkSession.sparkContext.getCheckpointDir() is not None:
-            ids = ids.checkpoint(eager=False)
-        else:
-            ids = ids.localCheckpoint(eager=False)
-        with_spans = bool(spec.get("with_spans", False))
-        packed = None
-        for s in sorted(fracs):
-            part = pack_token_sequences(
-                ids.filter(F.col("split") == s).select(id_col, "ids"),
-                id_col=id_col,
-                ids_col="ids",
-                seq_len=seq_len,
-                eos_id=eos_id,
-                n_shards=int(spec.get("n_shards", 256)),
-                seed=seed,
-                components=cc,
-                portable=bool(spec.get("portable", False)),
-                drop_last=bool(spec.get("drop_last", True)),
-                with_spans=with_spans,
-            ).withColumn("split", F.lit(s))
-            packed = part if packed is None else packed.unionByName(part)
-        packed = packed.select(
-            "split",
-            "shard",
-            "seq_index",
-            "input_ids",
-            *(["doc_spans"] if with_spans else []),
-        )
-        if mat is not None:
-            packed = mat.save("token_pack", packed)
-            mat.finalize(prune=_prune)
-        return packed
-
-    if mat is not None:
-        mat.finalize(prune=_prune)
     return out
+
+
+def _near_dup(r: _Run) -> DataFrame:
+    """Near-duplicate removal.  The CC map is computed ONCE and shared
+    with the split (drop list = non-representative members, route key
+    = component min) — the leakage-safety coupling."""
+    from data_toolz_spark.operators.dedup import minhash_components
+
+    c = r.c
+    # The CC stage materializes at call time (its pair checkpoint is an
+    # action), and the FINAL plan reads the cleaned text again —
+    # without a persist here, every upstream text stage (quality gate,
+    # line dedup, span dedup) executes twice.  At 100 TB running the
+    # text stages twice is the single largest avoidable CPU cost in
+    # the pipeline.
+    out = persist_tracked(r.out)
+    # the component map is built over the FINGERPRINT graph
+    # (minhash_components) — member pairs are never materialized, so a
+    # crawl's mega-clusters of identical docs cost O(k), not the k²
+    # edges the pair-expansion path would feed the CC loop
+    r.cc = minhash_components(
+        out, c.id_col, c.text_col, threshold=c.near_dup_threshold
+    )
+    if c.near_dup_keep == "longest":
+        # quality-aware survivor: the cluster's longest member (ties →
+        # min id) — the split routing still keys on the component MIN,
+        # so leakage-safety is untouched
+        from data_toolz_spark.operators.dedup import (
+            component_representatives,
+        )
+
+        reps = component_representatives(
+            r.cc,
+            out.select(
+                F.col(c.id_col).alias("id"),
+                F.length(c.text_col).alias("__s"),
+            ),
+            score_col="__s",
+        )
+        drops = reps.filter(F.col("id") != F.col("kept_id"))
+    else:
+        drops = r.cc.filter(F.col("id") != F.col("component"))
+    return out.join(
+        drops.select(F.col("id").alias(c.id_col)), on=c.id_col,
+        how="left_anti",
+    )
+
+
+def _media_dedup(r: _Run) -> DataFrame:
+    """Content-fingerprint near-dup tiers: image / audio / video
+    binary columns hash in one Arrow pass each, pairs mine through the
+    generic Hamming banding, and the skew-safe component map drops
+    everything but the min-id representative.  Runs AFTER the text
+    tier (fewer docs to decode — decode is the expensive step) and
+    BEFORE decontamination/splitting.  Like the text tier, each
+    component keeps exactly ONE surviving member, so split
+    leakage-safety holds downstream without coupling these maps into
+    component_split.  Each tier's CC loop runs at call time, hence the
+    persist (already in place when the near-dup stage ran)."""
+    from data_toolz_spark.operators.dedup import fingerprint_components
+
+    c, out = r.c, r.out
+    if r.cc is None:
+        out = persist_tracked(out)
+    for spec in c.media_dedup:
+        fp = _media_fingerprints(out, spec, c.id_col)
+        tau = int(spec.get("max_hamming", _MEDIA_TAU[spec["kind"]]))
+        comp = fingerprint_components(
+            fp.filter(F.col("__mfp").isNotNull()),
+            c.id_col,
+            "__mfp",
+            max_hamming=tau,
+        )
+        drops = comp.filter(
+            F.col("id") != F.col("component")
+        ).select(F.col("id").alias(c.id_col))
+        # lineage cut after each tier: the downstream plan references a
+        # flat scan instead of a tree that re-nests every anti-join
+        # under the chunk / decontamination self-joins (the analyzer's
+        # DeduplicateRelations pass blows up on that shape)
+        out = cut_lineage(out.join(drops, on=c.id_col, how="left_anti"))
+    return out
+
+
+def _decontaminate(r: _Run) -> DataFrame:
+    """Benchmark decontamination: AFTER near-dup removal (fewer docs to
+    scan), BEFORE the split (a contaminated doc must reach no split)."""
+    from data_toolz_spark.operators.decontamination import (
+        ngram_decontaminate,
+    )
+
+    c = r.c
+    flagged = ngram_decontaminate(
+        r.out,
+        c.eval_df,
+        id_col=c.id_col,
+        text_col=c.text_col,
+        n=c.decontaminate_n,
+    ).select(c.id_col)
+    return r.out.join(flagged, on=c.id_col, how="left_anti")
+
+
+def _strata(r: _Run) -> DataFrame:
+    """CCNet perplexity strata: bigram LM trained on the surviving
+    corpus, exact rank thresholds, labels joined back by id.  After
+    decontamination (train on the cleanest text), before the split
+    (samplers stratify within splits downstream)."""
+    from data_toolz_spark.operators.text_analysis import (
+        bigram_logprob,
+        bucket_by_thresholds,
+        build_bigram_counts,
+        build_vocab,
+        rank_thresholds,
+    )
+
+    c = r.c
+    # two costs to contain here (measured 108-114 s marginal at
+    # sf0.01 before, ~3 s after):
+    # 1. the LM reads the surviving corpus five times (vocab, bigram
+    #    counts, vocab stats, scoring, thresholds) — the persist makes
+    #    the re-reads cache hits;
+    # 2. the strata join embeds the corpus subtree in the final plan
+    #    several more times, and the ANALYZER re-walks the full
+    #    upstream tree per occurrence (persist does not shrink the
+    #    logical plan) — the lineage cut truncates it, the same device
+    #    as the media tiers.
+    out = cut_lineage(persist_tracked(r.out))
+
+    spec = dict(c.ppl_strata)
+    qs = [tuple(q) for q in spec.get("qs", ((1, 3), (2, 3)))]
+    labels = tuple(spec.get("labels", ("head", "middle", "tail")))
+    bucket_col = spec.get("out_col", "ppl_bucket")
+    # ``group_col`` (e.g. a language column) cuts the strata PER GROUP
+    # — CCNet's per-language percentiles: a language whose LM scores
+    # run globally high still splits into its own head/middle/tail
+    # instead of landing wholesale in "tail".  ``lang_col`` goes
+    # further: the LM ITSELF trains per language (grouped vocab +
+    # bigram tables, per-group backoff denominators — Wenzek et al.
+    # 2020 §4.3's per-language conditioning), and the strata default
+    # to the same grouping (spec's explicit group_col still wins).
+    group_col = spec.get("group_col", c.lang_col)
+    vocab_tbl = build_vocab(out, c.text_col, group_col=c.lang_col)
+    bigram_tbl = build_bigram_counts(out, c.text_col, group_col=c.lang_col)
+    lm_prune = spec.get("lm_prune")
+    if lm_prune is not None:
+        from data_toolz_spark.operators.text_analysis import (
+            prune_bigram_counts,
+        )
+
+        bigram_tbl = prune_bigram_counts(
+            bigram_tbl, vocab_tbl, group_col=c.lang_col, **dict(lm_prune)
+        )
+    scored = bigram_logprob(
+        out,
+        bigram_tbl,
+        vocab_tbl,
+        c.text_col,
+        id_col=c.id_col,
+        group_col=c.lang_col,
+    )
+    gcols = []
+    if group_col is not None:
+        scored = scored.join(out.select(c.id_col, group_col), on=c.id_col)
+        gcols = [group_col]
+    thr = rank_thresholds(scored, "bg_nll", qs, group_cols=gcols)
+    labeled = bucket_by_thresholds(
+        scored,
+        "bg_nll",
+        thr,
+        group_cols=gcols,
+        bucket_col=bucket_col,
+        labels=labels,
+    ).select(c.id_col, bucket_col)
+    return out.join(labeled, on=c.id_col, how="left")
+
+
+def _split(r: _Run) -> DataFrame:
+    """Deterministic split — leakage-safe when a component map exists."""
+    c = r.c
+    if r.cc is not None:
+        from data_toolz_spark.operators.sampling import component_split
+
+        return component_split(
+            r.out,
+            id_col=c.id_col,
+            fractions=c.fractions,
+            seed=c.seed,
+            components=r.cc,
+        )
+    from data_toolz_spark.operators.sampling import hash_split
+
+    return hash_split(r.out, [c.id_col], c.fractions, seed=c.seed)
+
+
+def _chunk(r: _Run) -> DataFrame:
+    """Context-window chunking, then (optional) token-budget packing
+    for shard assembly; each chunk inherits its document's split."""
+    from data_toolz_spark.operators.text_analysis import chunk_documents
+
+    c = r.c
+    splits = r.out.select(c.id_col, "split")
+    out = chunk_documents(
+        r.out,
+        id_col=c.id_col,
+        text_col=c.text_col,
+        max_words=c.chunk_max_words,
+        overlap=c.chunk_overlap,
+    ).join(splits, on=c.id_col)
+    if c.pack_budget is None:
+        return out
+    from data_toolz_spark.operators.sampling import pack_greedy
+
+    out = out.withColumn(
+        "__chunk_key",
+        F.concat_ws("#", F.col(c.id_col), F.col("chunk_index")),
+    )
+    return pack_greedy(
+        out,
+        id_col="__chunk_key",
+        token_col="n_words",
+        budget=c.pack_budget,
+        seed=c.seed,
+    ).drop("__chunk_key")
+
+
+def _token_pack(r: _Run) -> DataFrame:
+    """REAL-token-id sequence packing — the full raw-docs →
+    packed-pretraining-sequences path in one call: encode every
+    surviving doc to token ids (``model`` = a trained UnigramModel,
+    ``wp_vocab`` = a WordPiece vocab, or ``ids_expr`` = any prepared
+    id-array Column over text_col, e.g. bpe_encode_bytes_expr's
+    output), then pack_token_sequences PER SPLIT — sequences
+    concatenate documents, so packing across splits would stitch val
+    tokens into train sequences; the per-split invocations keep every
+    sequence split-pure and the near-dup component routing still
+    applies.  Output: (split, shard, seq_index, input_ids).  The
+    encode touches EVERY surviving byte, so under ``materialize_to``
+    this stage materializes too (the model fingerprints by its
+    value-carrying repr; an ids_expr Column by its expression
+    string)."""
+    from data_toolz_spark.operators.sampling import pack_token_sequences
+
+    c, out, spec = r.c, r.out, dict(r.c.token_pack)
+    seq_len = int(spec["seq_len"])
+    eos_id = int(spec["eos_id"])
+    if "model" in spec:
+        from data_toolz_spark.operators.unigram import unigram_encode
+
+        ids = unigram_encode(
+            out,
+            spec["model"],
+            id_col=c.id_col,
+            text_col=c.text_col,
+            # None → the model's own longest piece (a hardcoded 8
+            # diverged from models trained larger)
+            max_piece_len=spec.get("max_piece_len"),
+        )
+    elif "wp_vocab" in spec:
+        from data_toolz_spark.operators.wordpiece import wordpiece_encode
+
+        ids = wordpiece_encode(
+            out,
+            spec["wp_vocab"],
+            id_col=c.id_col,
+            text_col=c.text_col,
+            max_word_len=spec.get("max_word_len"),
+        )
+    else:
+        ids = out.select(F.col(c.id_col), spec["ids_expr"].alias("ids"))
+    ids = ids.join(out.select(c.id_col, "split"), on=c.id_col)
+    # the encode plan embeds the full upstream tree and each split's
+    # pack re-reads it — same persist + lineage cut as the strata stage
+    ids = cut_lineage(persist_tracked(ids))
+    with_spans = bool(spec.get("with_spans", False))
+    packed = None
+    for s in sorted(c.fractions):
+        part = pack_token_sequences(
+            ids.filter(F.col("split") == s).select(c.id_col, "ids"),
+            id_col=c.id_col,
+            ids_col="ids",
+            seq_len=seq_len,
+            eos_id=eos_id,
+            n_shards=int(spec.get("n_shards", 256)),
+            seed=c.seed,
+            components=r.cc,
+            portable=bool(spec.get("portable", False)),
+            drop_last=bool(spec.get("drop_last", True)),
+            with_spans=with_spans,
+        ).withColumn("split", F.lit(s))
+        packed = part if packed is None else packed.unionByName(part)
+    return packed.select(
+        "split",
+        "shard",
+        "seq_index",
+        "input_ids",
+        *(["doc_spans"] if with_spans else []),
+    )
 
 
 def stage_counts(
@@ -1147,71 +1143,28 @@ def stage_counts(
 ) -> dict[str, int]:
     """Audit helper: row count surviving each pipeline stage.
 
-    Runs the pipeline several times with later stages disabled — one
-    action per stage, for sign-off reports at modest scale (use the
-    single-plan :func:`prepare_training_corpus` for production runs).
+    Runs :func:`prepare_training_corpus` once with the same ``kwargs``
+    and counts the rows after each enabled region that can drop
+    documents — one action per region, for sign-off reports at modest
+    scale.  Keys: ``raw`` (input), ``quality`` (site cap, text repair
+    and every quality/language gate), ``text_dedup`` (line and span
+    dedup together; it replaces the line-dedup-only ``line_dedup``
+    key of earlier versions), ``near_dup``, ``media_dedup``,
+    ``decontaminated`` and ``final`` (rows of the returned frame:
+    documents, or chunks / packed sequences when those stages are
+    on).  A key is present only when its region is enabled.
 
-    Materialization kwargs are STRIPPED (review fix r12): each
-    truncated sub-run here is a different stage chain, so passing
-    ``materialize_to`` through would make every sub-run's finalize
-    prune the others' (and the real run's) stage tables.
+    Materialization kwargs are IGNORED: the counting run never writes
+    stage tables, so it cannot prune a real run's tables.
     """
-    base = dict(kwargs)
-    base.pop("materialize_to", None)
-    base.pop("input_token", None)
-    base.pop("materialize_retention", None)
+    bound = inspect.signature(prepare_training_corpus).bind(
+        docs, eval_df, **kwargs
+    )
+    bound.apply_defaults()
+    c = SimpleNamespace(**bound.arguments)
+    c.materialize_to = None
     counts: dict[str, int] = {"raw": docs.count()}
-    counts["quality"] = prepare_training_corpus(
-        docs,
-        None,
-        **{
-            **base,
-            "near_dup_threshold": None,
-            "media_dedup": None,
-            "line_dedup_max_doc_freq": None,
-            "span_dedup_n": None,
-            "chunk_max_words": None,
-            "pack_budget": None,
-        },
-    ).count()
-    if base.get("line_dedup_max_doc_freq") is not None:
-        counts["line_dedup"] = prepare_training_corpus(
-            docs,
-            None,
-            **{
-                **base,
-                "near_dup_threshold": None,
-                "media_dedup": None,
-                "span_dedup_n": None,
-                "chunk_max_words": None,
-                "pack_budget": None,
-            },
-        ).count()
-    if base.get("near_dup_threshold", 0.8) is not None:
-        counts["near_dup"] = prepare_training_corpus(
-            docs,
-            None,
-            **{
-                **base,
-                "media_dedup": None,
-                "chunk_max_words": None,
-                "pack_budget": None,
-            },
-        ).count()
-    if base.get("media_dedup"):
-        counts["media_dedup"] = prepare_training_corpus(
-            docs,
-            None,
-            **{**base, "chunk_max_words": None, "pack_budget": None},
-        ).count()
-    if eval_df is not None:
-        counts["decontaminated"] = prepare_training_corpus(
-            docs,
-            eval_df,
-            **{**base, "chunk_max_words": None, "pack_budget": None},
-        ).count()
-    final = prepare_training_corpus(docs, eval_df, **base)
-    counts["final"] = final.count()
+    counts["final"] = _run_stages(c, counts).count()
     return counts
 
 

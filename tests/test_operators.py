@@ -670,11 +670,9 @@ def test_minhash_components_property_equivalence(spark):
         want = sorted(map(tuple, connected_components(
             minhash_near_duplicates(
                 df, "doc_id", "text", threshold=threshold, shingle=2,
-                persist=False,
             )
         ).collect()))
         got = sorted(map(tuple, minhash_components(
             df, "doc_id", "text", threshold=threshold, shingle=2,
-            persist=False,
         ).collect()))
         assert got == want, (trial, threshold, docs)

@@ -1349,3 +1349,138 @@ def test_pipeline_ppl_strata_lm_prune(spark):
     }
     assert counts["head"] >= (n + 2) // 3, counts
     assert sum(counts.values()) == n, counts
+
+
+def _drop_prefix_tables(spark, prefix):
+    from data_toolz_spark.catalog import drop_stale_table
+
+    for r in spark.sql("SHOW TABLES").collect():
+        if r["tableName"].startswith(prefix):
+            drop_stale_table(spark, r["tableName"])
+
+
+#: (stage, chain fingerprint, table) of the resume-after-crash config
+#: materialized under prefix ``t_pipe_pin``.  Warehouses written by any
+#: earlier version resume only while these stay equal: a change here is
+#: a break of every existing materialized prefix.
+PINNED_STAGE_CHAIN = [
+    ("decontaminate",
+     "92b24abeed5e13c1a63ad202dab013f72564cd6c728b07ccf6f7bb0d32e51327",
+     "t_pipe_pin_s04_decontaminate"),
+    ("gates",
+     "9e7cd364e29485f6b748f560a65b02ff470fb5767e3b3fcecb8d796a2b102a6a",
+     "t_pipe_pin_s01_gates"),
+    ("near_dup",
+     "e961a24e437d7cbe07a31c3f5d79525f47f7d3437381f4595de0f45c5b2f8b7a",
+     "t_pipe_pin_s03_near_dup"),
+    ("near_dup_cc",
+     "e961a24e437d7cbe07a31c3f5d79525f47f7d3437381f4595de0f45c5b2f8b7a",
+     "t_pipe_pin_s03_near_dup_cc"),
+    ("split",
+     "0ff8492057a01d12b2ef05c3c03a728da50c366b52fe0a47e1c4b8842a4096c8",
+     "t_pipe_pin_s05_split"),
+    ("text_dedup",
+     "77918bcf2b1203beb5a73a0005dcfd09d06f7426c8fff8747029e5311aa6d9d6",
+     "t_pipe_pin_s02_text_dedup"),
+]
+
+
+def test_pipeline_stage_chain_fingerprints_pinned(spark, corpus, eval_df):
+    """The materialization chain (stage names, params, order, table
+    numbering) is a persistent format: the manifest of a fixed config
+    must match the recorded fingerprints exactly."""
+    prefix = "t_pipe_pin"
+    _drop_prefix_tables(spark, prefix)
+    prepare_training_corpus(
+        corpus,
+        eval_df,
+        materialize_to=prefix,
+        quality_thresholds={"min_tokens": 5},
+        line_dedup_max_doc_freq=2,
+        near_dup_threshold=0.8,
+        decontaminate_n=5,
+        fractions=FRACS,
+    )
+    got = sorted(
+        (r["stage"], r["fp"], r["table"])
+        for r in spark.table(f"{prefix}_manifest").collect()
+    )
+    _drop_prefix_tables(spark, prefix)
+    assert got == PINNED_STAGE_CHAIN
+
+
+def test_stage_counts_with_token_pack(spark, corpus, eval_df):
+    """Document counts do not depend on the output stages: with
+    token_pack on, every document-level count equals the count without
+    it, and ``final`` counts the packed sequences the pipeline returns."""
+    kw = dict(
+        quality_thresholds={"min_tokens": 5},
+        line_dedup_max_doc_freq=2,
+        near_dup_threshold=0.8,
+        decontaminate_n=5,
+        fractions=FRACS,
+    )
+    tp = {
+        "ids_expr": F.transform(
+            F.split("text", r"\s+"),
+            lambda w: (F.pmod(F.xxhash64(w), F.lit(1000)) + 1).cast("int"),
+        ),
+        "seq_len": 16,
+        "eos_id": 0,
+        "n_shards": 2,
+        "drop_last": False,
+    }
+    docs_only = stage_counts(corpus, eval_df, **kw)
+    packed = stage_counts(corpus, eval_df, token_pack=tp, **kw)
+    assert set(packed) == set(docs_only)
+    for key in set(docs_only) - {"final"}:
+        assert packed[key] == docs_only[key], key
+    assert packed["quality"] <= packed["raw"]
+    assert packed["final"] == prepare_training_corpus(
+        corpus, eval_df, token_pack=tp, **kw
+    ).count()
+
+
+def test_config_errors_raise_before_any_job(spark, corpus):
+    """Every config error raises before the first Spark job — no
+    call-time near-dup pass, no stage table written under
+    materialize_to."""
+    prefix = "t_pipe_badcfg"
+    _drop_prefix_tables(spark, prefix)
+    bad = [
+        (dict(pack_budget=64), "pack_budget"),
+        (
+            dict(chunk_max_words=8,
+                 token_pack={"ids_expr": F.array(F.lit(1)),
+                             "seq_len": 8, "eos_id": 0}),
+            "exclusive",
+        ),
+        (dict(token_pack={"seq_len": 8, "eos_id": 0}), "model"),
+        (dict(lang_model="lid", keep_langs=None), "keep_langs"),
+        (
+            dict(quality_rank_gate={"col": "n_tokens", "keep": "gt"}),
+            "keep must be",
+        ),
+    ]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # the probe group proves the tracker sees this thread's jobs
+    sc.setJobGroup("t_pipe_badcfg_probe", "job-count probe")
+    spark.range(3).count()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup("t_pipe_badcfg_probe")
+    for i, (kwargs, match) in enumerate(bad):
+        group = f"t_pipe_badcfg_{i}"
+        sc.setJobGroup(group, "invalid pipeline config")
+        try:
+            with pytest.raises(ValueError, match=match):
+                prepare_training_corpus(
+                    corpus, None, materialize_to=prefix, **kwargs
+                )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert tracker.getJobIdsForGroup(group) == [], kwargs
+    assert not [
+        r for r in spark.sql("SHOW TABLES").collect()
+        if r["tableName"].startswith(prefix)
+    ]
